@@ -6,8 +6,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Per-stream throughput probe: every completed streaming contract
   * query records (input rows, trigger-execution seconds, batches) from
-  * its own `recentProgress`, keyed by the memory-sink name with the
-  * run counter stripped. Bench folds the registry into
+  * its own `recentProgress`, keyed by the query name with the run
+  * counter stripped. Bench folds the registry into
   * BENCH_LAST.json as `stream_rows_per_sec`, so a regression in
   * state-store size or batch count shows up as a rate drop — the
   * end-to-end seconds alone hide it behind the ~1 s fixed micro-batch

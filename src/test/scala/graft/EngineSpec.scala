@@ -24,8 +24,14 @@ class QueriesSpec extends SparkSuite {
 
   for ((name, fn) <- SparkEntry.queries) {
     test(s"$name runs and is non-empty") {
+      // every streaming key must leave a StreamMeter record of its own
+      val metered = name.startsWith("stream_")
+      if (metered) graft.streaming.StreamMeter.stats.clear()
       val df = fn(spark, sf)
       assert(df.count() > 0, s"$name returned 0 rows")
+      if (metered)
+        assert(!graft.streaming.StreamMeter.stats.isEmpty,
+          s"$name left no StreamMeter record")
     }
   }
 }
